@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query and
   * total seconds over SparkEntry.queries at SPARK_GRAFT_SF_DIR. */
 object Bench {
@@ -172,22 +170,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // Engine default: object-hash aggregation (TypedImperativeAggregate
-      // sketches) keeps hash mode far past the 128-key default -- sketch
-      // buffers are ~136 B, so 64k keys/partition is ~9 MB, while the
-      // sort fallback re-sorts the full exploded input (round-1 lesson).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
     // Untimed warmup: JVM/codegen/parquet-reader spin-up should not be
     // attributed to whichever query happens to run first. Profiling
     // (round 4) showed first use of each execution-machinery family
@@ -258,7 +242,7 @@ object Bench {
     val gcBetween = sys.env.getOrElse("SPARK_GRAFT_GC_BETWEEN", "1") != "0"
     val calibMs = calibrateMs()
     val calibMemMs =
-      calibrateMemMs(math.min(32, math.max(1, cpus.toInt)))
+      calibrateMemMs(math.min(32, math.max(1, cpus)))
     System.err.println(s"[bench] cpu calibration: $calibMs ms, " +
       s"mem calibration: $calibMemMs ms " +
       s"(sink=${java.lang.Long.toHexString(calSink)})")

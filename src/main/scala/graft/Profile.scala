@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
-/** Dev tool: run a query and print per-STAGE task-time attribution
-  * (stage name from the first RDD's callsite, task count, summed task
-  * ms, GC ms, input/shuffle bytes) — the stage-level view the bench's
-  * per-query totals cannot give. Usage:
+/** Dev tool: profile one registered query. Prints its formatted
+  * physical plan, then each trial's wall time (trial 1 is cold: the
+  * first run of the query in a fresh JVM), then the last trial's
+  * per-STAGE task-time attribution (stage name from the first RDD's
+  * callsite, task count, summed task ms, GC ms, input/shuffle bytes) —
+  * the stage-level view the bench's per-query totals cannot give.
+  * Usage:
   *   runMain graft.Profile <queryName> [sfDir] [trials]
   */
 object Profile {
@@ -14,18 +16,7 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val trials = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"${Tables.scratchRoot}/spark-local")
-      .config("spark.sql.warehouse.dir", s"${Tables.scratchRoot}/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     case class St(var n: Int = 0, var taskMs: Long = 0, var gcMs: Long = 0,
         var inB: Long = 0, var srB: Long = 0, var swB: Long = 0,
         var recs: Long = 0)
@@ -56,9 +47,14 @@ object Profile {
     for (i <- 1 to trials) {
       stages.clear(); names.clear()
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val df = fn(spark, sfDir)
+      val n = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[profile] $name run$i: $dt%.2f s, $n rows")
+      // The plan is printed first but explained only after trial 1 ran,
+      // so planning it does not warm the cold trial.
+      if (i == 1) df.explain("formatted")
+      val tag = if (i == 1) " (cold)" else ""
+      println(f"[profile] $name run$i$tag: $dt%.2f s, $n rows")
       if (i == trials) {
         val rows = stages.toSeq.sortBy(-_._2.taskMs)
         println(f"${"stageId"}%8s ${"tasks"}%6s ${"task_ms"}%8s ${"gc_ms"}%7s " +

@@ -764,8 +764,8 @@ object Ingest {
     * database/table if absent, append-or-replace, then answer from the
     * catalog table. */
   private def catalogOps: Q = (s, d) => {
-    // warehouse dir is a static conf — set in the session builders
-    // (Verify/Bench/Explain/tests point it at scratch).
+    // warehouse dir is a static conf — GraftSession points it at
+    // scratch for every entry point.
     s.sql("CREATE DATABASE IF NOT EXISTS graft_sink")
     s.sql("DROP TABLE IF EXISTS graft_sink.documents")
     // The in-memory catalog is per-session but the warehouse dir

@@ -1117,8 +1117,9 @@ object Llm {
     // r14: the capped postings checkpoint to scratch (path keyed by the
     // df cap — LlmSpec's capped≡uncapped pin runs other caps through
     // the same plan); without the artifact the pair kernel re-ran the
-    // df agg + join-back lineage (NgramProfile's dedup_ngram finding,
-    // same family). Since r17 the kernel reads gk exactly once.
+    // df agg + join-back lineage (the r14 per-stage profile of
+    // dedup_ngram found this, same family; SCALING.md §10.1a). Since
+    // r17 the kernel reads gk exactly once.
     val gk = Scratch.table(s,
       s"$scratchRoot/containment_gk_$dfCap/${Scratch.key(d)}") {
       val dfTab = sh.groupBy("sh_h").agg(count(lit(1)).as("df"))
@@ -1719,9 +1720,9 @@ object Llm {
     // spillable, map-side-combined — and grams above the cap never
     // reach the join at all. Same row set by construction.
     //
-    // r14 CPU fix, two parts (NgramProfile stage attribution: the full
-    // query cost 35 task-CPU-seconds at sf0.1 where its stages summed
-    // to ~14 run once):
+    // r14 CPU fix, two parts (a per-stage profile, SCALING.md
+    // §10.1a: the full query cost 35 task-CPU-seconds at sf0.1
+    // where its stages summed to ~14 run once):
     // (a) the (source, lang, gram_h) key folds to ONE xxhash64 — the
     //     block rides inside the hash, so different blocks can never
     //     join (blocking preserved) and every shuffle/agg/join compares

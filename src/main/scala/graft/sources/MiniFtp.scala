@@ -97,7 +97,7 @@ class MiniFtpServer(dir: String,
       .filter(_.isFile).sortBy(_.getName).toSeq
 
   private def handle(sock: Socket): Unit = {
-    sock.setSoTimeout(15000)
+    sock.setSoTimeout(RemoteClientPool.serverIdleTimeoutMs)
     val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
     val out = new OutputStreamWriter(sock.getOutputStream, UTF_8)
     def reply(s: String): Unit = { out.write(s + "\r\n"); out.flush() }

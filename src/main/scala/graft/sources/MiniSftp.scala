@@ -484,7 +484,7 @@ class MiniSftpServer(dir: String,
 
   private def handle(sock: Socket): Unit = {
     try {
-      sock.setSoTimeout(20000)
+      sock.setSoTimeout(RemoteClientPool.serverIdleTimeoutMs)
       val t = new SshTransport(sock, isClient = false, MiniSftp.hostKey)
       t.handshake()
       var authed = false

@@ -31,9 +31,19 @@ object RemoteClientPool {
   private val idle =
     new ConcurrentHashMap[String, java.util.ArrayDeque[Idle]]()
 
+  /** Default for [[idleTtlMs]]. */
+  val defaultIdleTtlMs: Long = 60000L
+
   /** Idle sessions older than this are closed at the next pool touch.
     * Var (not config-plumbed) so tests can force expiry. */
-  @volatile private[graft] var idleTtlMs: Long = 60000L
+  @volatile private[graft] var idleTtlMs: Long = defaultIdleTtlMs
+
+  /** How long the loopback servers ([[MiniFtpServer]], [[MiniSftpServer]])
+    * wait on an idle control connection before dropping it: twice the
+    * default TTL, so the pool always retires a session before its server
+    * has dropped it and never lends out a dead one (which would cost a
+    * failed attempt, a backoff and an error-log line). */
+  val serverIdleTimeoutMs: Int = (2 * defaultIdleTtlMs).toInt
 
   /** Diagnostics for specs: handshakes actually performed vs avoided. */
   val created = new AtomicLong(0)

@@ -7,6 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * filesystem byte-for-byte, and protocol errors must surface loudly. */
 class FtpSpec extends AnyFunSuite {
 
+  test("the loopback FTP and SFTP servers keep an idle connection past the pool's TTL") {
+    // A server that drops idle sessions sooner than the pool expires
+    // them lets the pool lend out a dead connection, which costs a
+    // failed attempt and a backoff on the next fetch. Both servers
+    // read this one timeout.
+    assert(sources.RemoteClientPool.serverIdleTimeoutMs >
+      sources.RemoteClientPool.defaultIdleTtlMs)
+  }
+
   test("FtpSocketClient lists and fetches byte-identical payloads over real sockets") {
     val fixture = ops.Ingest.buildFixture()
     val client = new sources.FtpSocketClient("localhost", 21, fixture)
